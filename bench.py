@@ -26,12 +26,8 @@ import pandas as pd  # module-level: pandas_udf resolves type hints here
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# Headline queries: flagship UDF pipeline + one per operator family.
-# Round-3 registry trim (VERDICT r2 #2): pricing_summary / events_hourly /
-# user_sessions / regional_customer_volume / orders_no_big_lineitem were
-# demo queries, now unregistered; their headline slots are taken by the
-# merged dim_join_filters + order_stats_histogram (same operators, one
-# plan). See BASELINE.md round-3 notes for the r2→r3 comparability map.
+# Headline queries: flagship UDF pipeline + one per operator family
+# (BASELINE.md round-3 notes map the r2 headline set onto this one).
 HEADLINE = [
     "extract_spans_pipeline",
     "extraction_summary",
@@ -116,10 +112,11 @@ def run_bench(sf_dir: str, master: str, shuffle_partitions: int) -> dict:
     stats: dict[str, dict] = {}
 
     # Cached-intermediate transparency (VERDICT r4 #1/#2): queries built on
-    # _cached_materialize tables share kernel cost — whichever consumer
-    # runs first pays the build; later consumers (and later best-of-N
-    # iterations) read the cache. Disclose every timed run that consumed a
-    # pre-built table so per-query numbers are never silently credited.
+    # materialized tables share their cost — whichever consumer runs first
+    # pays the build; later consumers (and later best-of-N iterations) read
+    # the cache. Disclose every timed run that consumed a pre-built table
+    # so per-query numbers are never silently credited.
+    from docling_metrics_spark import cache
     from docling_metrics_spark.plans import queries as Q
 
     shared: dict[str, list] = {}
@@ -140,14 +137,14 @@ def run_bench(sf_dir: str, master: str, shuffle_partitions: int) -> dict:
                 # the north rule requires, but a cost the r1-r4 flagship
                 # numbers (pre-sharing, pure kernel) did NOT carry; the
                 # r4→r5 flagship comparison in BASELINE.md notes this.
-                Q.invalidate_cache(Q._FLAGSHIP_PERDOC_PATH)
-            ev0 = len(Q.CACHE_EVENTS)
+                cache.invalidate_cache(Q._FLAGSHIP_PERDOC_PATH)
+            ev0 = len(cache.CACHE_EVENTS)
             t0 = time.time()
             df = fn(spark, sf_dir)
             _force(df)
             samples.append(time.time() - t0)
             reused = sorted(
-                {p for p, kind in Q.CACHE_EVENTS[ev0:] if kind == "reuse"}
+                {p for p, kind in cache.CACHE_EVENTS[ev0:] if kind == "reuse"}
             )
             if reused:
                 cur = set(shared.get(name, []))
@@ -193,7 +190,7 @@ def run_bench(sf_dir: str, master: str, shuffle_partitions: int) -> dict:
         "unit": "sec",
         "queries": timings,
         "corpus_caps": caps,
-        # queries whose timed run consumed a _cached_materialize table a
+        # queries whose timed run consumed a materialized table a
         # previous query/iteration already built (paths listed) — their
         # per-query numbers exclude that build cost (VERDICT r4 #1/#2)
         "shared_intermediates": shared,

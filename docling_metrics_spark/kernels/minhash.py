@@ -2,8 +2,8 @@
 
 Published algorithms (Broder 1997 resemblance/MinHash; Charikar 2002
 SimHash). Pure Python/numpy; deterministic (fixed hash constants, no
-process-salted ``hash()``). These back the dedup operators in
-``operators/dedup.py``; at cluster scale the per-doc signature computation
+process-salted ``hash()``). These back the dedup queries in
+``plans/queries.py``; at cluster scale the per-doc signature computation
 is an Arrow UDF and the candidate generation is a band-bucket shuffle join.
 """
 
@@ -119,16 +119,6 @@ def minhash_signature(shingle_hashes: "set[int] | np.ndarray",
     with np.errstate(over="ignore"):
         ax = x[:, None] * a[None, :] + b[None, :]
     return np.min(ax, axis=0)
-
-
-def minhash_bands(signature: np.ndarray, num_bands: int = 32) -> list[int]:
-    """LSH band keys: hash of each band's slice of the signature."""
-    rows = len(signature) // num_bands
-    keys = []
-    for band in range(num_bands):
-        chunk = signature[band * rows : (band + 1) * rows].tobytes()
-        keys.append(stable_hash64(struct.pack("<I", band) + chunk))
-    return keys
 
 
 def minhash_estimate(sig_a: np.ndarray, sig_b: np.ndarray) -> float:

@@ -92,8 +92,9 @@ _ENDING_QUOTES = [
 # compiled flag set, and Python's own Unicode IGNORECASE OVER-folds
 # (it matches ı/İ with i, per the re docs) — so each folded literal is
 # spelled as its exact RE2 fold orbit and the patterns compile with
-# re.ASCII and NO IGNORECASE.
-_FOLD_ORBITS = {"s": "sSſ", "k": "kKK"}
+# re.ASCII and NO IGNORECASE. No contraction literal contains a 'k', so
+# the k orbit needs no entry.
+_FOLD_ORBITS = {"s": "sSſ"}
 
 
 def _ci(literal: str) -> str:

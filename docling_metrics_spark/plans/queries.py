@@ -23,6 +23,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from docling_metrics_spark.cache import SRC_TAG as _SRC_TAG, materialize
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 _QUERIES: dict[str, QueryFn] = {}
@@ -63,36 +65,13 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# §2.4 aggregations — TPC-H Q1 shape (scan → filter → groupBy partial+final)
-#
 # NOTE on registration: the driver's correctness gate records the FIRST 50
-# registered queries only (VERDICT r2 #2), so the registry is trimmed to
-# exactly 50. Nine redundant TPC-H demo queries below are plain functions
-# (no @query): their plan properties stay pinned in tests/test_plans.py and
-# the operators they demonstrated ride on two merged registered queries
-# (dim_join_filters, order_stats_histogram) plus the remaining registry.
+# registered queries only (VERDICT r2 #2), so the registry is exactly 50.
+# The TPC-H operator families (broadcast/semi/anti joins, partial+final
+# aggregation, stats + histogram) ride on merged registered queries
+# (dim_join_filters, order_stats_histogram); their plan properties are
+# pinned in tests/test_plans.py.
 # ---------------------------------------------------------------------------
-
-
-def pricing_summary(spark, sf_dir):
-    """TPC-H Q1 demo (unregistered; partial+final agg pinned in
-    tests/test_plans.py::test_partial_aggregation / filter pushdown)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("2024-09-01 00:00:00").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("sum_disc_price"),
-            F.round(F.avg("l_quantity"), 6).alias("avg_qty"),
-            F.round(F.avg("l_discount"), 6).alias("avg_disc"),
-            F.count("*").alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -133,25 +112,6 @@ def top_revenue_orders(spark, sf_dir):
     )
 
 
-def regional_customer_volume(spark, sf_dir):
-    """Broadcast-dimension join demo (unregistered; broadcast plan pinned in
-    tests/test_plans.py::test_broadcast_join_for_dimensions; the registered
-    oracle-checked twin is ``dim_join_filters``)."""
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
-    return (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy(F.col("r_name").alias("region_name"), F.col("n_name").alias("nation_name"))
-        .agg(
-            F.count("*").alias("n_customers"),
-            F.round(F.sum("c_acctbal"), 2).alias("total_acctbal"),
-        )
-        .orderBy("region_name", "nation_name")
-    )
-
-
 @query(
     "dim_join_filters",
     """
@@ -186,8 +146,8 @@ def dim_join_filters(spark, sf_dir):
     query (SURVEY §2.3): 'broadcast' = customers per region/nation through
     two broadcast dims; 'anti' = the reference's missing-prediction branch
     (data_loader.py:122-134) as left-anti; 'semi' = GT∩pred membership as
-    left-semi. One oracle covers all three join strategies; the individual
-    plan shapes stay pinned in tests/test_plans.py."""
+    left-semi. One oracle covers all three join strategies; its broadcast
+    joins and pushed-down scan filter are pinned in tests/test_plans.py."""
     c = _t(spark, sf_dir, "customer")
     n = _t(spark, sf_dir, "nation")
     r = _t(spark, sf_dir, "region")
@@ -225,59 +185,6 @@ def dim_join_filters(spark, sf_dir):
         )
     )
     return bc.unionByName(anti).unionByName(semi).orderBy("part", "k")
-
-
-# ---------------------------------------------------------------------------
-# §2.2 filters/projections — pushdown-friendly scan
-# ---------------------------------------------------------------------------
-
-
-def discounted_revenue(spark, sf_dir):
-    """Filter-pushdown scan demo (unregistered; codegen span pinned in
-    tests/test_plans.py::test_whole_stage_codegen_present)."""
-    return (
-        _t(spark, sf_dir, "lineitem")
-        .filter(
-            (F.col("l_discount") >= 0.05)
-            & (F.col("l_discount") <= 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2).alias(
-                "revenue"
-            )
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# §2.3 semi/anti joins — the reference's missing-prediction branch
-# (data_loader.py:122-134) as left-anti; GT∩pred as left-semi
-# ---------------------------------------------------------------------------
-
-
-def orders_no_big_lineitem(spark, sf_dir):
-    """Left-anti demo (unregistered; registered twin ``dim_join_filters``)."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_quantity") > 45)
-    return (
-        o.join(li, o.o_orderkey == li.l_orderkey, "left_anti")
-        .groupBy(F.col("o_orderpriority").alias("priority"))
-        .agg(F.count("*").alias("n_orders"))
-        .orderBy("priority")
-    )
-
-
-def segments_with_urgent_orders(spark, sf_dir):
-    """Left-semi demo (unregistered; registered twin ``dim_join_filters``)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderpriority") == "1-URGENT")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left_semi")
-        .groupBy(F.col("c_mktsegment").alias("segment"))
-        .agg(F.count("*").alias("n_customers"))
-        .orderBy("segment")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -352,32 +259,6 @@ def top_order_per_customer(spark, sf_dir):
             F.col("o_totalprice").alias("totalprice"),
         )
         .orderBy("custkey")
-    )
-
-
-def stats_summary(spark, sf_dir):
-    """compute_stats demo (unregistered; column pruning pinned in
-    tests/test_plans.py; registered twin ``order_stats_histogram``)."""
-    # compute_stats analog (layout/utils/stats.py:71-93)
-    return _t(spark, sf_dir, "orders").agg(
-        F.count("*").alias("n"),
-        F.round(F.avg("o_totalprice"), 4).alias("mean_price"),
-        F.round(F.stddev_samp("o_totalprice"), 4).alias("std_price"),
-        F.round(F.min("o_totalprice"), 2).alias("min_price"),
-        F.round(F.max("o_totalprice"), 2).alias("max_price"),
-    )
-
-
-def price_histogram(spark, sf_dir):
-    """Histogram demo (unregistered; registered twin ``order_stats_histogram``)."""
-    # 20-bin histogram analog (stats.py:71-93) with deterministic int buckets
-    return (
-        _t(spark, sf_dir, "orders")
-        .groupBy(
-            F.floor(F.col("o_totalprice") / 50000).cast("bigint").alias("bucket")
-        )
-        .agg(F.count("*").alias("n"))
-        .orderBy("bucket")
     )
 
 
@@ -503,64 +384,7 @@ def nation_set_ops(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# streaming-shaped event analytics (batch over event-time buckets + sessions)
-# ---------------------------------------------------------------------------
-
-
-def events_hourly(spark, sf_dir):
-    """Event-time bucket agg demo (unregistered; the registered
-    ``streaming_windowed_counts`` oracle covers the identical windowed
-    aggregation through Structured Streaming)."""
-    return (
-        _t(spark, sf_dir, "events")
-        .groupBy(
-            F.floor(F.unix_micros(F.col("ts").cast("timestamp")) / F.lit(3600000000.0)).cast("bigint").alias("hour_bucket"),
-            "event_type",
-        )
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("total_value"))
-        .orderBy("hour_bucket", "event_type")
-    )
-
-
-# The gap-sessionize SQL doubles as the oracle for the REGISTERED
-# streaming_sessionize query (applyInPandasWithState twin): the stateful
-# streaming operator must reproduce the batch window-SQL semantics exactly.
-_SESSIONS_SQL = """
-    SELECT user_id, count(*) AS n_events,
-           CAST(1 + sum(CASE WHEN gap > 1800 THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions
-    FROM (
-        SELECT user_id,
-               epoch(ts) - lag(epoch(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap
-        FROM events
-    )
-    GROUP BY user_id ORDER BY user_id
-    """
-
-
-def user_sessions(spark, sf_dir):
-    """Batch gap-sessionize demo (unregistered; its SQL is the oracle of
-    the registered ``streaming_sessionize``, and the stream==batch parity
-    is additionally pinned in tests/test_streaming.py)."""
-    from pyspark.sql.window import Window
-
-    e = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return (
-        e.withColumn("epoch", F.unix_micros(F.col("ts").cast("timestamp")) / F.lit(1000000.0))
-        .withColumn("gap", F.col("epoch") - F.lag("epoch").over(w))
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            (1 + F.sum(F.when(F.col("gap") > 1800, 1).otherwise(0))).alias(
-                "n_sessions"
-            ),
-        )
-        .orderBy("user_id")
-    )
-
-
-# ---------------------------------------------------------------------------
-# training-data ops over `documents`: token stats, quality, fingerprints, dedup
+# training-data ops over `documents`: token stats, quality, dedup
 # ---------------------------------------------------------------------------
 
 
@@ -638,20 +462,6 @@ def exact_dedup(spark, sf_dir):
         F.countDistinct(F.md5("text")).alias("n_distinct"),
         (F.count("*") - F.countDistinct(F.md5("text"))).alias("n_dups"),
     )
-
-
-# Unregistered round 4 to stay within the driver's 50-query window
-# (VERDICT r3 #3): the md5-fingerprint operator is already oracle-exercised
-# inside exact_dedup and streaming_dedup; its slot went to
-# tore_report_images. Kept callable as a plain function.
-def doc_fingerprints(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    return d.select(
-        "doc_id",
-        F.md5(F.lower(F.regexp_replace("text", "[^a-z0-9 ]", ""))).alias(
-            "fingerprint"
-        ),
-    ).orderBy("doc_id")
 
 
 @query(
@@ -773,43 +583,6 @@ def embedding_topk(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _src_fingerprint() -> str:
-    """8-hex digest of the fixture-generating source (datagen, extraction,
-    kernels, UDFs, and this module). Every /tmp fixture/cache path embeds
-    it, so caches invalidate automatically when the generating code
-    changes instead of silently serving stale data across edits."""
-    import hashlib
-    import os as _os
-
-    pkg = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    h = hashlib.md5()
-    paths = [
-        _os.path.join(pkg, "datagen.py"),
-        _os.path.join(pkg, "extraction", "html_extract.py"),
-        _os.path.join(pkg, "operators", "udfs.py"),
-        # pipeline.py + skew.py feed the CACHED flagship per-doc table
-        # (round-5 sharing) — without them here, an edit to run_pipeline
-        # or the salted aggregation would serve stale cached results to
-        # the flagship, extraction_summary, AND their DuckDB oracles.
-        _os.path.join(pkg, "pipeline.py"),
-        _os.path.join(pkg, "operators", "skew.py"),
-        _os.path.abspath(__file__.rstrip("c")),
-    ]
-    kdir = _os.path.join(pkg, "kernels")
-    paths += [
-        _os.path.join(kdir, f) for f in sorted(_os.listdir(kdir))
-        if f.endswith(".py")
-    ]
-    for f in paths:
-        try:
-            with open(f, "rb") as fh:
-                h.update(fh.read())
-        except OSError:
-            pass
-    return h.hexdigest()[:8]
-
-
-_SRC_TAG = _src_fingerprint()
 
 
 # Per-query synthetic-corpus caps for the heavy UDF operators ("no silent
@@ -846,10 +619,8 @@ def _corpus(spark, sf_dir, cap: int = 2000):
     (the deployment shape — the corpus is a lake table, not re-synthesized
     per query), and the 10 kernel queries sharing a tier stop regenerating
     the same documents. 128 splits so every parallelism level gets full
-    task fan-out (testdata parquet is single-row-group; this one is not)."""
-    import hashlib
-    import os as _os
-
+    task fan-out (testdata parquet is single-row-group; this one is not).
+    The corpus depends on the doc count alone, so tiers share it."""
     from docling_metrics_spark.datagen import write_corpus
 
     if sf_dir not in _CORPUS_SIZES:
@@ -859,26 +630,33 @@ def _corpus(spark, sf_dir, cap: int = 2000):
             f"{sf_dir}/documents.parquet"
         ).metadata.num_rows
     n = min(_CORPUS_SIZES[sf_dir], cap)
-    path = (f"/tmp/dms_corpus_{_SRC_TAG}_"
-            f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}_{n}")
-    if not _os.path.exists(_os.path.join(path, "_SUCCESS")):
-        write_corpus(spark, path, n_docs=n, partitions=128)
+    path = materialize(
+        f"/tmp/dms_corpus_{n}", f"n_docs={n}",
+        lambda d: write_corpus(spark, d, n_docs=n, partitions=128),
+    )
     return spark.read.parquet(path)
 
 
-_FLAGSHIP_PERDOC_PATH = f"/tmp/dms_flagship_perdoc_{_SRC_TAG}"
+def _cached_materialize(spark, path: str, tag: str, build):
+    """:func:`materialize` for a DataFrame: ``build()`` written to parquet
+    at ``path`` once per (source, ``tag``), then read back."""
+    return spark.read.parquet(materialize(
+        path, tag, lambda d: build().write.mode("overwrite").parquet(d)
+    ))
+
+
+_FLAGSHIP_PERDOC_PATH = "/tmp/dms_flagship_perdoc"
 
 
 def _flagship_perdoc_table(spark, sf_dir):
     """Materialize the flagship per-document metric rows ONCE per
-    (tier, cap) and share them (the TORE-trio `_cached_materialize`
-    pattern, VERDICT r4 #1): `extract_spans_pipeline` returns the rows,
-    `extraction_summary` re-aggregates them, and the fused kernel stops
-    executing twice per gate run. The write is the production checkpoint
+    (tier, cap) and share them (VERDICT r4 #1): `extract_spans_pipeline`
+    returns the rows, `extraction_summary` re-aggregates them, and the
+    fused kernel stops executing twice per gate run. The write is the production checkpoint
     shape (the per-doc table a lake run persists anyway); bench.py
     invalidates the marker before each flagship timing so the flagship
     number always prices the live kernel, and discloses reuse by any
-    other query via CACHE_EVENTS → shared_intermediates."""
+    other query via cache.CACHE_EVENTS → shared_intermediates."""
     return _cached_materialize(
         spark,
         _FLAGSHIP_PERDOC_PATH,
@@ -952,9 +730,9 @@ def extraction_summary(spark, sf_dir):
     the same rows in one pass — a cross-engine gate on the distributed
     aggregation algebra itself. sum/avg/min/max are rounded identically in
     both engines (see :func:`_summary_oracle_sql`). The per-doc table is
-    the shared `_cached_materialize` one — when `extract_spans_pipeline`
-    already ran this (tier, cap), the fused kernel is NOT re-executed
-    (VERDICT r4 #1); the reuse is disclosed via CACHE_EVENTS."""
+    the shared materialized one — when `extract_spans_pipeline` already
+    ran this (tier, cap), the fused kernel is NOT re-executed (VERDICT
+    r4 #1); the reuse is disclosed via cache.CACHE_EVENTS."""
     from docling_metrics_spark.pipeline import aggregate_metrics
 
     return _rounded_summary(
@@ -1221,7 +999,7 @@ def teds_table_pairs(spark, sf_dir):
     )
 
 
-_MAP_DOC_POOLS_PATH = f"/tmp/dms_map_doc_pools_{_SRC_TAG}"
+_MAP_DOC_POOLS_PATH = "/tmp/dms_map_doc_pools"
 
 
 # The 12 (alias, pool column, area, thr_idx) conditions that assemble the
@@ -1305,7 +1083,7 @@ def layout_map(spark, sf_dir):
     # vs the pre-oracle query (r4's >2× regression) — cache it per
     # (tier, cap) like the TORE matrix table so repeat runs re-derive the
     # surface from the stored pools instead of re-running the mAP kernel
-    # (VERDICT r4 #3); reuse is disclosed via CACHE_EVENTS.
+    # (VERDICT r4 #3); reuse is disclosed via cache.CACHE_EVENTS.
     t = _cached_materialize(
         spark,
         _MAP_DOC_POOLS_PATH,
@@ -1400,15 +1178,8 @@ def _scale_boxes_half(col):
     )
 
 
-_TORE_CM_PATH = f"/tmp/dms_tore_cm_{_SRC_TAG}"
+_TORE_CM_PATH = "/tmp/dms_tore_cm"
 
-
-#: (path, "build" | "reuse") per _cached_materialize call, in call order.
-#: bench.py snapshots this around each timed query to disclose which
-#: queries consumed a table another query already paid to build
-#: ("shared_intermediates", VERDICT r4 #1) — cached-table reuse must be
-#: visible in bench JSON, never silently credited.
-CACHE_EVENTS: list[tuple[str, str]] = []
 
 #: Named runtime counters queries publish for bench JSON ("no silent
 #: caps": e.g. rows excluded because they exceed an oracle encoding's
@@ -1426,49 +1197,12 @@ VERIFICATION_CAPS: dict[str, str] = {
 }
 
 
-def _cached_materialize(spark, path: str, tag: str, build):
-    """Materialize ``build()`` to the static ``path`` and return the
-    read-back table. The oracle SQL strings embed these paths at import
-    time, so the cache key cannot live in the path — it lives in a
-    ``_DMS_INPUT`` marker recording which input (sf_dir, cap) produced the
-    table: within a gate run the shared kernel runs once, not once per
-    query; a tier switch invalidates and rebuilds."""
-    import os
-
-    marker = os.path.join(path, "_DMS_INPUT")
-    if not (
-        os.path.exists(os.path.join(path, "_SUCCESS"))
-        and os.path.exists(marker)
-        and open(marker).read() == tag
-    ):
-        build().write.mode("overwrite").parquet(path)
-        with open(marker, "w") as f:
-            f.write(tag)
-        CACHE_EVENTS.append((path, "build"))
-    else:
-        CACHE_EVENTS.append((path, "reuse"))
-    return spark.read.parquet(path)
-
-
-def invalidate_cache(path: str) -> None:
-    """Force the next `_cached_materialize` on ``path`` to rebuild (drops
-    the marker, not the data). bench.py calls this before each flagship
-    timing so the headline always prices the live kernel — keep the
-    marker filename knowledge HERE, next to the code that writes it."""
-    import os
-
-    marker = os.path.join(path, "_DMS_INPUT")
-    if os.path.exists(marker):
-        os.remove(marker)
-
-
 def _tore_cm_table(spark, sf_dir):
     """Materialize the per-document flattened TORE confusion matrices
     (doc_id, cm ARRAY<DOUBLE>[(C+1)²]) to a fixed path — the shared
     intermediate all three TORE queries' DuckDB oracles re-aggregate (the
     extraction_summary pattern, VERDICT r3 #1). The rasterize kernel — the
-    dominant cost of the three TORE queries — runs once per (tier, cap)
-    via :func:`_cached_materialize`."""
+    dominant cost of the three TORE queries — runs once per (tier, cap)."""
     from docling_metrics_spark.kernels.datagen_meta import N_CATEGORIES
     from docling_metrics_spark.operators.udfs import make_tore_partial_udf
 
@@ -2093,28 +1827,22 @@ def _lsh_sigs_table(spark, sf_dir, id_cap: int = 300, n_tables: int = 24,
     table next to the embeddings, amortized over every search; the
     self-join in the search would otherwise re-evaluate the signature UDF
     per plan branch. bench.py materializes it in untimed prep."""
-    import hashlib
-    import os as _os
-
     from docling_metrics_spark.operators.udfs import make_multi_lsh_buckets_udf
 
-    sig_path = (
-        f"/tmp/dms_lsh_sigs_{_SRC_TAG}_"
-        f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-        f"_{id_cap}_{n_tables}x{n_planes}_{seed}"
-    )
-    if not _os.path.exists(_os.path.join(sig_path, "_SUCCESS")):
+    def build():
         udf = make_multi_lsh_buckets_udf(
             dim=64, n_planes=n_planes, n_tables=n_tables, seed=seed
         )
-        (
+        return (
             _t(spark, sf_dir, "embeddings")
             .filter(F.col("vec_id") < id_cap)
             .select("vec_id", F.posexplode(udf("embedding")).alias("t", "bucket"))
-            .write.mode("overwrite")
-            .parquet(sig_path)
         )
-    return spark.read.parquet(sig_path)
+
+    return _cached_materialize(
+        spark, "/tmp/dms_lsh_sigs",
+        f"{sf_dir}|{id_cap}|{n_tables}x{n_planes}|{seed}", build,
+    )
 
 
 def _lsh_candidate_pairs(spark, sf_dir, id_cap: int = 300, n_tables: int = 24,
@@ -2637,6 +2365,21 @@ def streaming_windowed_counts(spark, sf_dir):
     ).orderBy("window_epoch", "event_type")
 
 
+# The gap-sessionize SQL doubles as the oracle for the REGISTERED
+# streaming_sessionize query (applyInPandasWithState twin): the stateful
+# streaming operator must reproduce the batch window-SQL semantics exactly.
+_SESSIONS_SQL = """
+    SELECT user_id, count(*) AS n_events,
+           CAST(1 + sum(CASE WHEN gap > 1800 THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions
+    FROM (
+        SELECT user_id,
+               epoch(ts) - lag(epoch(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap
+        FROM events
+    )
+    GROUP BY user_id ORDER BY user_id
+    """
+
+
 @query("streaming_sessionize", _SESSIONS_SQL)
 def streaming_sessionize(spark, sf_dir):
     """Custom stateful streaming operator (applyInPandasWithState): gap-based
@@ -2942,24 +2685,14 @@ def teds_similarity_join(spark, sf_dir, threshold: float = 0.8):
     # materialize the per-table stats once (the join's two branches would
     # otherwise each re-evaluate the stats UDF — the persisted tree-index
     # table of the reference's candidate index, histo_candidate_index.h)
-    import hashlib as _hashlib
-    import os as _os
-
-    stats_path = (
-        f"/tmp/dms_tsj_stats_{_SRC_TAG}_"
-        f"{_hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-        f"_{CORPUS_CAPS['teds_similarity_join']}"
+    tables = _cached_materialize(
+        spark, "/tmp/dms_tsj_stats",
+        f"{sf_dir}|{CORPUS_CAPS['teds_similarity_join']}",
+        lambda: base.unionByName(perturbed)
+        .select("tid", table_tree_stats_udf("html").alias("st"))
+        .select("tid", "st.bracket", "st.n_nodes", "st.hist")
+        .filter(F.col("bracket").isNotNull()),
     )
-    if not _os.path.exists(_os.path.join(stats_path, "_SUCCESS")):
-        (
-            base.unionByName(perturbed)
-            .select("tid", table_tree_stats_udf("html").alias("st"))
-            .select("tid", "st.bracket", "st.n_nodes", "st.hist")
-            .filter(F.col("bracket").isNotNull())
-            .write.mode("overwrite")
-            .parquet(stats_path)
-        )
-    tables = spark.read.parquet(stats_path)
     # fixed-path long-form stats export (tid, n_nodes, tag, cnt): the
     # DuckDB oracle re-derives the log-size buckets + Kailing label bound
     # from THIS table in SQL (VERDICT r3 #5) — a JVM explode of the cached
@@ -3033,13 +2766,13 @@ def teds_similarity_join(spark, sf_dir, threshold: float = 0.8):
 _ORACLES["teds_similarity_join"] = _tsj_oracle()
 
 
-_MEDIA_PATH = f"/tmp/dms_media_{_SRC_TAG}"
+_MEDIA_PATH = "/tmp/dms_media"
 
 
 def _materialize_media(spark, sf_dir, cap):
     """Explode media spans → synthesized binary payloads, persisted once so
     both multimodal queries decode from the same table and the DuckDB
-    oracles can read the raw BLOBs (cache protocol: :func:`_cached_materialize`)."""
+    oracles can read the raw BLOBs."""
     from docling_metrics_spark.multimodal import media_table
 
     return _cached_materialize(
@@ -3178,23 +2911,20 @@ def media_frame_sample(spark, sf_dir):
 
 def _coco_fixture(spark, sf_dir) -> str:
     """Deterministic COCO-style JSON (images + annotations) derived from the
-    corpus layout boxes; written once per sf tier."""
+    corpus layout boxes of the first 200 documents (tier-independent)."""
     import json as _json
     import os as _os
 
-    path = "/tmp/dms_coco_fixture"
-    marker = _os.path.join(path, "_DONE")
-    if not _os.path.exists(marker):
-        _os.makedirs(path, exist_ok=True)
+    def write(d):
         from docling_metrics_spark.datagen import gen_document
 
         anns, images = [], []
         ann_id = 0
         for i in range(200):
-            d = gen_document(i)
-            images.append({"id": i, "width": d["page_width"],
-                           "height": d["page_height"]})
-            for b in d["gt_boxes"]:
+            doc = gen_document(i)
+            images.append({"id": i, "width": doc["page_width"],
+                           "height": doc["page_height"]})
+            for b in doc["gt_boxes"]:
                 x0, y0, x1, y1 = b["bbox"]
                 anns.append({
                     "id": ann_id, "image_id": i,
@@ -3203,14 +2933,14 @@ def _coco_fixture(spark, sf_dir) -> str:
                     "bbox": [x0, y0, x1 - x0, y1 - y0],
                 })
                 ann_id += 1
-        with open(_os.path.join(path, "annotations.json"), "w") as f:
+        with open(_os.path.join(d, "annotations.json"), "w") as f:
             for a in anns:  # JSON-lines for spark.read.json
                 f.write(_json.dumps(a) + "\n")
-        with open(_os.path.join(path, "images.json"), "w") as f:
+        with open(_os.path.join(d, "images.json"), "w") as f:
             for im in images:
                 f.write(_json.dumps(im) + "\n")
-        open(marker, "w").close()
-    return path
+
+    return materialize("/tmp/dms_coco_fixture", "n_images=200", write)
 
 
 @query(
@@ -3265,10 +2995,7 @@ def _mdpair_fixture(spark, sf_dir) -> str:
     is deliberately missing to exercise the warn/anti-join branch."""
     import os as _os
 
-    path = "/tmp/dms_mdpairs_fixture"
-    marker = _os.path.join(path, "_DONE")
-    if not _os.path.exists(marker):
-        _os.makedirs(path, exist_ok=True)
+    def write(path):
         from docling_metrics_spark.datagen import gen_document
 
         def span_text(spans):
@@ -3287,8 +3014,8 @@ def _mdpair_fixture(spark, sf_dir) -> str:
             if i % 13 != 7:  # missing-prediction branch
                 with open(_os.path.join(path, f"pred_{sid}.md"), "w") as f:
                     f.write(span_text(d["pred_spans"]) or "(empty)")
-        open(marker, "w").close()
-    return path
+
+    return materialize("/tmp/dms_mdpairs_fixture", "n_pairs=40", write)
 
 
 @query(
@@ -3377,6 +3104,9 @@ def md_pair_missing(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
+_SMILES_FIXTURE_PATH = "/tmp/dms_smiles_fixture"
+
+
 def _smiles_fixture(spark) -> str:
     """Deterministic SMILES GT/pred pairs parquet (the reference's JSON
     vector fixture shape, test_smiles_metric_json_vectors.py:15-19):
@@ -3385,8 +3115,7 @@ def _smiles_fixture(spark) -> str:
     import os as _os
     import random as _random
 
-    path = f"/tmp/dms_smiles_fixture_{_SRC_TAG}.parquet"
-    if not _os.path.exists(path):
+    def write(d):
         rng = _random.Random(20260817)
         frags = ["C", "CC", "CCO", "c1ccccc1", "N", "O", "CC(=O)O",
                  "C(=O)N", "CCN(CC)CC", "c1ccncc1", "CC(C)C", "COC"]
@@ -3407,9 +3136,10 @@ def _smiles_fixture(spark) -> str:
         import pandas as _pd
 
         _pd.DataFrame(rows, columns=["sid", "gt_smiles", "pred_smiles"]).to_parquet(
-            path
+            _os.path.join(d, "pairs.parquet")
         )
-    return path
+
+    return materialize(_SMILES_FIXTURE_PATH, "n_pairs=400", write)
 
 
 @query(
@@ -3421,7 +3151,7 @@ def _smiles_fixture(spark) -> str:
            CAST(sum(CASE WHEN pred_smiles IS NULL THEN 1 ELSE 0 END) AS BIGINT)
                AS n_missing,
            round(avg(length(gt_smiles)), 3) AS avg_gt_len
-    FROM read_parquet('/tmp/dms_smiles_fixture_{_SRC_TAG}.parquet')
+    FROM read_parquet('{_SMILES_FIXTURE_PATH}/*.parquet')
     """,
 )
 def smiles_equality(spark, sf_dir):
@@ -3496,6 +3226,9 @@ def smiles_quality(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
+_MARKUSH_FIXTURE_PATH = "/tmp/dms_markush_fixture"
+
+
 def _markush_fixture(spark) -> str:
     """Deterministic Markush CXSMILES GT/pred pairs parquet.
 
@@ -3509,8 +3242,7 @@ def _markush_fixture(spark) -> str:
     import os as _os
     import random as _random
 
-    path = f"/tmp/dms_markush_fixture_{_SRC_TAG}.parquet"
-    if not _os.path.exists(path):
+    def write(d):
         from docling_metrics_spark.kernels.markush import parse_fragment
 
         rng = _random.Random(20260817)
@@ -3554,8 +3286,11 @@ def _markush_fixture(spark) -> str:
             rows.append((i, gt, pred))
         import pandas as _pd
 
-        _pd.DataFrame(rows, columns=["sid", "gt_cx", "pred_cx"]).to_parquet(path)
-    return path
+        _pd.DataFrame(rows, columns=["sid", "gt_cx", "pred_cx"]).to_parquet(
+            _os.path.join(d, "pairs.parquet")
+        )
+
+    return materialize(_MARKUSH_FIXTURE_PATH, "n_pairs=300", write)
 
 
 @query(
@@ -3568,7 +3303,7 @@ def _markush_fixture(spark) -> str:
                AS n_missing,
            CAST(sum(CASE WHEN gt_cx LIKE '%|%' THEN 1 ELSE 0 END) AS BIGINT)
                AS n_with_extension
-    FROM read_parquet('/tmp/dms_markush_fixture_{_SRC_TAG}.parquet')
+    FROM read_parquet('{_MARKUSH_FIXTURE_PATH}/*.parquet')
     """,
 )
 def markush_equality(spark, sf_dir):
@@ -3743,6 +3478,9 @@ def bucketed_order_revenue(spark, sf_dir):
 
 
 _STREAM_PERDOC_PATH = f"/tmp/dms_stream_perdoc_{_SRC_TAG}"
+#: Stream sources: built once, then replayed by each AvailableNow run.
+_STREAM_CORPUS_PATH = "/tmp/dms_stream_corpus"
+_STREAM_DEDUP_SRC_PATH = "/tmp/dms_stream_dedup_src"
 
 
 @query("streaming_extract", _summary_oracle_sql(_STREAM_PERDOC_PATH))
@@ -3757,8 +3495,6 @@ def streaming_extract(spark, sf_dir):
     the DuckDB oracle re-aggregates the materialized stream output in one
     pass, cross-engine-gating the stream-side aggregation algebra; the
     rows themselves are pinned equal to the batch twin by pytest."""
-    import os as _os
-
     from docling_metrics_spark.datagen import generate_documents_df
     from docling_metrics_spark.pipeline import aggregate_metrics
     from docling_metrics_spark.streaming.windowed import (
@@ -3766,11 +3502,11 @@ def streaming_extract(spark, sf_dir):
         run_available_now,
     )
 
-    src = f"/tmp/dms_stream_corpus_{_SRC_TAG}"
-    if not _os.path.exists(_os.path.join(src, "_SUCCESS")):
-        generate_documents_df(spark, 400, partitions=8).write.mode(
-            "overwrite"
-        ).parquet(src)
+    src = materialize(
+        _STREAM_CORPUS_PATH, "n_docs=400",
+        lambda d: generate_documents_df(spark, 400, partitions=8)
+        .write.mode("overwrite").parquet(d),
+    )
     per_doc = run_available_now(
         extract_documents_stream(spark, src), output_mode="append"
     )
@@ -3785,7 +3521,7 @@ def streaming_extract(spark, sf_dir):
     f"""
     SELECT count(DISTINCT md5(raw_html)) AS n_unique,
            count(DISTINCT md5(raw_html)) AS n_distinct_fp
-    FROM read_parquet('/tmp/dms_stream_dedup_src_{_SRC_TAG}/*.parquet')
+    FROM read_parquet('{_STREAM_DEDUP_SRC_PATH}/*.parquet')
     """,
 )
 def streaming_dedup(spark, sf_dir):
@@ -3793,22 +3529,21 @@ def streaming_dedup(spark, sf_dir):
     first-seen-wins on the content fingerprint. Source has 100 injected
     duplicate documents (re-ids of docs 0-99), so n_unique < n_rows; batch
     twin asserted equal in tests/test_streaming.py."""
-    import os as _os
-
     from docling_metrics_spark.datagen import generate_documents_df
     from docling_metrics_spark.streaming.windowed import (
         dedup_documents_stream,
         run_available_now,
     )
 
-    src = f"/tmp/dms_stream_dedup_src_{_SRC_TAG}"
-    if not _os.path.exists(_os.path.join(src, "_SUCCESS")):
+    def write(d):
         docs = generate_documents_df(spark, 400, partitions=8)
         dups = (
             generate_documents_df(spark, 100, partitions=2)
             .withColumn("doc_id", F.concat(F.col("doc_id"), F.lit("_dup")))
         )
-        docs.unionByName(dups).write.mode("overwrite").parquet(src)
+        docs.unionByName(dups).write.mode("overwrite").parquet(d)
+
+    src = materialize(_STREAM_DEDUP_SRC_PATH, "n_docs=400|n_dups=100", write)
     uniq = run_available_now(
         dedup_documents_stream(spark, src), output_mode="append"
     )

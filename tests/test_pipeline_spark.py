@@ -9,11 +9,7 @@ from docling_metrics_spark.extraction import extract_spans_from_html
 from docling_metrics_spark.kernels.layout import evaluate_map
 from docling_metrics_spark.kernels.textmetrics import evaluate_text_pair
 from docling_metrics_spark.operators.skew import salted_agg, salted_array_sum
-from docling_metrics_spark.pipeline import (
-    aggregate_metrics,
-    extract_and_verify,
-    run_pipeline,
-)
+from docling_metrics_spark.pipeline import aggregate_metrics, run_pipeline
 
 N_DOCS = 120
 REL = 1e-6
@@ -33,11 +29,10 @@ def per_doc(spark, docs):
     return df
 
 
-def test_span_equality_all_docs(spark, docs):
+def test_span_equality_all_docs(spark, per_doc):
     """North-rule gate: distributed extraction == reference spans, exactly."""
-    ev = extract_and_verify(docs)
-    n_total = ev.count()
-    n_equal = ev.filter("span_equal").count()
+    n_total = per_doc.count()
+    n_equal = per_doc.filter("span_equal").count()
     assert n_total == N_DOCS
     assert n_equal == N_DOCS
 

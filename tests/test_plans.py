@@ -3,6 +3,9 @@ plan, not just hoped for — filter pushdown into the parquet scan, nested
 column pruning, broadcast joins for dimensions, partial aggregation, and a
 shuffle-free narrow pipeline before the final aggregation."""
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -14,19 +17,19 @@ def _plan(df, mode: str = "formatted") -> str:
 
 
 def test_filter_pushdown_reaches_scan(spark):
-    from docling_metrics_spark.plans.queries import pricing_summary
+    from docling_metrics_spark.plans.queries import dim_join_filters
 
-    plan = _plan(pricing_summary(spark, SF))
+    plan = _plan(dim_join_filters(spark, SF))
     assert "PushedFilters" in plan
-    # the shipdate predicate must appear in the pushed filter list
+    # the anti join's quantity predicate must appear in the pushed filter list
     pushed = [l for l in plan.splitlines() if "PushedFilters" in l]
-    assert any("l_shipdate" in l for l in pushed), pushed
+    assert any("l_quantity" in l for l in pushed), pushed
 
 
 def test_column_pruning(spark):
-    from docling_metrics_spark.plans.queries import stats_summary
+    from docling_metrics_spark.plans.queries import order_stats_histogram
 
-    plan = _plan(stats_summary(spark, SF))
+    plan = _plan(order_stats_histogram(spark, SF))
     read = [l for l in plan.splitlines() if "ReadSchema" in l]
     assert read and "o_totalprice" in read[0]
     # a single-column aggregate must not drag the whole orders schema in
@@ -34,17 +37,17 @@ def test_column_pruning(spark):
 
 
 def test_broadcast_join_for_dimensions(spark):
-    from docling_metrics_spark.plans.queries import regional_customer_volume
+    from docling_metrics_spark.plans.queries import dim_join_filters
 
-    plan = _plan(regional_customer_volume(spark, SF))
+    plan = _plan(dim_join_filters(spark, SF))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
 
 def test_partial_aggregation(spark):
-    from docling_metrics_spark.plans.queries import pricing_summary
+    from docling_metrics_spark.plans.queries import order_stats_histogram
 
-    plan = _plan(pricing_summary(spark, SF), "simple")
+    plan = _plan(order_stats_histogram(spark, SF), "simple")
     # map-side combine: HashAggregate appears as partial + final pair
     assert plan.count("HashAggregate") >= 2
 
@@ -64,9 +67,9 @@ def test_pipeline_is_narrow_before_agg(spark):
 def test_whole_stage_codegen_present(spark):
     # AQE materializes codegen spans only at execution; in the executed
     # final plan they surface as "*(n)" stage markers.
-    from docling_metrics_spark.plans.queries import discounted_revenue
+    from docling_metrics_spark.plans.queries import top_revenue_orders
 
-    df = discounted_revenue(spark, SF)
+    df = top_revenue_orders(spark, SF)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "*(" in plan, plan
@@ -346,7 +349,7 @@ def test_registry_fits_driver_window():
 
 
 def test_cached_materialize_invalidates_on_tag_change(spark, tmp_path):
-    """The marker-file cache behind the TORE cm / media tables: same tag →
+    """The marker-file cache behind every materialized table: same tag →
     the build thunk runs once; a tag change (tier/cap switch) rebuilds."""
     from docling_metrics_spark.plans.queries import _cached_materialize
 
@@ -364,6 +367,58 @@ def test_cached_materialize_invalidates_on_tag_change(spark, tmp_path):
     assert len(calls) == 2, "tag change must rebuild"
 
 
+def test_materialize_failed_write_leaves_nothing(tmp_path):
+    """A write that dies half way must leave neither a table a later call
+    would reuse nor a temp dir; the next call rebuilds."""
+    from docling_metrics_spark.cache import CACHE_EVENTS, materialize
+
+    path = str(tmp_path / "t")
+
+    def broken(d):
+        with open(os.path.join(d, "part-0.txt"), "w") as fh:
+            fh.write("half")
+        raise RuntimeError("killed mid-write")
+
+    for _ in range(2):  # the second call must not find a reusable table
+        with pytest.raises(RuntimeError):
+            materialize(path, "x", broken)
+        assert os.listdir(tmp_path) == []
+
+    def good(d):
+        with open(os.path.join(d, "part-0.txt"), "w") as fh:
+            fh.write("whole")
+
+    ev0 = len(CACHE_EVENTS)
+    materialize(path, "x", good)
+    materialize(path, "x", good)
+    assert CACHE_EVENTS[ev0:] == [(path, "build"), (path, "reuse")]
+    assert os.listdir(tmp_path) == ["t"]
+    assert open(os.path.join(path, "part-0.txt")).read() == "whole"
+
+
+def test_source_change_rebuilds_fixtures(spark, monkeypatch):
+    """A fixture built by one version of the code is never served to
+    another: changing the source fingerprint rebuilds the COCO, markdown
+    pair and SMILES fixtures even though their tags are unchanged."""
+    from docling_metrics_spark import cache
+    from docling_metrics_spark.plans.queries import (
+        _coco_fixture,
+        _mdpair_fixture,
+        _smiles_fixture,
+    )
+
+    fixtures = [
+        lambda: _coco_fixture(spark, SF),
+        lambda: _mdpair_fixture(spark, SF),
+        lambda: _smiles_fixture(spark),
+    ]
+    paths = [f() for f in fixtures]  # built or reused at the real source
+    ev0 = len(cache.CACHE_EVENTS)
+    monkeypatch.setattr(cache, "SRC_TAG", "edited0")
+    assert [f() for f in fixtures] == paths
+    assert cache.CACHE_EVENTS[ev0:] == [(p, "build") for p in paths]
+
+
 def test_invalidate_cache_forces_rebuild_and_logs_build_event(spark, tmp_path):
     """bench.py's flagship headline depends on this contract: after
     invalidate_cache(path), the next _cached_materialize with the SAME
@@ -371,11 +426,8 @@ def test_invalidate_cache_forces_rebuild_and_logs_build_event(spark, tmp_path):
     'build' CACHE_EVENT — if invalidation ever became a no-op, the
     headline would silently report cached-parquet-read speed as kernel
     throughput."""
-    from docling_metrics_spark.plans.queries import (
-        CACHE_EVENTS,
-        _cached_materialize,
-        invalidate_cache,
-    )
+    from docling_metrics_spark.cache import CACHE_EVENTS, invalidate_cache
+    from docling_metrics_spark.plans.queries import _cached_materialize
 
     path = str(tmp_path / "cache")
     calls = []

@@ -163,7 +163,7 @@ def test_streaming_extract_summary_matches_batch_summary(spark):
     extraction_summary's algebra, over the stream-materialized table."""
     from docling_metrics_spark.pipeline import aggregate_metrics, run_pipeline
     from docling_metrics_spark.plans.queries import (
-        _SRC_TAG,
+        _STREAM_CORPUS_PATH,
         _rounded_summary,
         streaming_extract,
     )
@@ -172,9 +172,7 @@ def test_streaming_extract_summary_matches_batch_summary(spark):
     batch_row = (
         _rounded_summary(
             aggregate_metrics(
-                run_pipeline(
-                    spark.read.parquet(f"/tmp/dms_stream_corpus_{_SRC_TAG}")
-                )
+                run_pipeline(spark.read.parquet(_STREAM_CORPUS_PATH))
             )
         )
         .collect()[0]
@@ -201,13 +199,14 @@ def test_streaming_dedup_matches_batch(spark):
     (100 injected duplicate documents must be dropped)."""
     from pyspark.sql import functions as F
 
-    from docling_metrics_spark.plans.queries import streaming_dedup
+    from docling_metrics_spark.plans.queries import (
+        _STREAM_DEDUP_SRC_PATH,
+        streaming_dedup,
+    )
 
     row = streaming_dedup(spark, "unused").collect()[0]
     batch = (
-        spark.read.parquet(
-            f"/tmp/dms_stream_dedup_src_{__import__('docling_metrics_spark.plans.queries', fromlist=['_SRC_TAG'])._SRC_TAG}"
-        )
+        spark.read.parquet(_STREAM_DEDUP_SRC_PATH)
         .agg(
             F.count("*").alias("n_rows"),
             F.count_distinct(F.md5("raw_html")).alias("n_unique"),

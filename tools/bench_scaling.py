@@ -101,7 +101,7 @@ def worker(master: str, shuffle_partitions: int, corpus: str) -> None:
 
 
 def _submit_cmd(master: str, shuffle: int, out_json: str,
-                corpus: str = CORPUS) -> list[str]:
+                corpus: str) -> list[str]:
     """spark-submit invocation for one tier: engine from the zip alone."""
     import shutil
 
@@ -128,18 +128,22 @@ def orchestrate(n_docs: int, via_submit: bool = False,
     60× the median span count every 100th doc instead of every 500th) so
     the salted two-stage aggregation — not the narrow map — is the
     binding skew mechanism (VERDICT r4 #6); same protocol otherwise."""
+    from docling_metrics_spark.cache import materialize
     from docling_metrics_spark.datagen import write_corpus
     from docling_metrics_spark.session import build_session
 
-    # the path encodes n_docs AND the skew parameters: a _SUCCESS-only
-    # check on a shared path would silently benchmark a stale corpus when
-    # either knob changes between invocations
-    corpus = f"{CORPUS}{'_skew100x60' if skew else ''}_{n_docs}"
-    if not os.path.exists(os.path.join(corpus, "_SUCCESS")):
+    # one corpus on disk at a time, keyed by every write_corpus argument
+    # (a knob change rebuilds it instead of benchmarking a stale corpus)
+    kw = {"n_docs": n_docs, "partitions": 128}
+    if skew:
+        kw.update(skew_every=100, skew_factor=60)
+
+    def write(d):
         spark = build_session(master="local[8]", shuffle_partitions=8)
-        kw = {"skew_every": 100, "skew_factor": 60} if skew else {}
-        write_corpus(spark, corpus, n_docs=n_docs, partitions=128, **kw)
+        write_corpus(spark, d, **kw)
         spark.stop()
+
+    corpus = materialize(CORPUS, json.dumps(kw, sort_keys=True), write)
 
     results = {}
     # taskset pins each run to a dedicated core allocation — the honest
