@@ -15,7 +15,8 @@ as an idiomatic Spark DataFrame pipeline:
 - exact span-sequence equality (kind, text, media_ref, order) computed
   JVM-side as a native array<struct> comparison,
 - salted two-stage aggregation for skewed giant documents,
-- per-partition lineage + metrics checkpointing with anti-join resume.
+- per-partition lineage + metrics checkpointing with resume that skips
+  committed buckets.
 
 All metric kernels are implemented from scratch in pure Python/numpy
 (kernels/) so the same code serves as the single-process oracle in tests

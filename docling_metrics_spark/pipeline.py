@@ -30,26 +30,30 @@ from docling_metrics_spark.operators.skew import salted_agg
 from docling_metrics_spark.operators.udfs import flagship_doc_udf
 
 
+# Spark SQL comparator ordering span structs by ``offset`` (backticked:
+# OFFSET is a keyword). The helpers below are SQL text, not Column-API
+# chains: each Column-API call is one py4j round trip, and the flagship plan
+# is rebuilt on every run.
+_BY_OFFSET = (
+    "(a, b) -> CASE WHEN a.`offset` < b.`offset` THEN -1"
+    " WHEN a.`offset` > b.`offset` THEN 1 ELSE 0 END"
+)
+
+
 def _span_text(col: str) -> F.Column:
     """Concatenated text of non-media spans, in offset order (JVM-side)."""
-    ordered = F.array_sort(
-        F.filter(F.col(col), lambda s: s.text.isNotNull()),
-        lambda a, b: F.when(a.offset < b.offset, -1)
-        .when(a.offset > b.offset, 1)
-        .otherwise(0),
+    return F.expr(
+        f"array_join(transform(array_sort(filter(`{col}`, s -> s.text IS NOT NULL),"
+        f" {_BY_OFFSET}), s -> s.text), ' ')"
     )
-    return F.array_join(F.transform(ordered, lambda s: s.text), " ")
 
 
 def _table_htmls(col: str) -> F.Column:
     """Ordered list of table-span HTML strings (JVM-side nested pruning)."""
-    tables = F.array_sort(
-        F.filter(F.col(col), lambda s: s.kind == F.lit("table")),
-        lambda a, b: F.when(a.offset < b.offset, -1)
-        .when(a.offset > b.offset, 1)
-        .otherwise(0),
+    return F.expr(
+        f"transform(array_sort(filter(`{col}`, s -> s.kind = 'table'),"
+        f" {_BY_OFFSET}), s -> s.text)"
     )
-    return F.transform(tables, lambda s: s.text)
 
 
 def run_pipeline(docs: DataFrame) -> DataFrame:
@@ -62,7 +66,7 @@ def run_pipeline(docs: DataFrame) -> DataFrame:
     for the equality check, back in as derived text). Prediction-side
     text/tables are still pruned JVM-side (`_span_text`/`_table_htmls` over
     ``pred_spans`` — only the strings the kernels need enter Python), and
-    span-sequence equality stays a JVM-native ``eqNullSafe`` over the
+    span-sequence equality stays a JVM-native null-safe ``<=>`` over the
     returned ``extracted`` column.
 
     GT side uses the *extracted* spans (the engine's own output), compared
@@ -79,23 +83,23 @@ def run_pipeline(docs: DataFrame) -> DataFrame:
             "pred_boxes",
         ),
     )
-    return scored.select(
+    return scored.selectExpr(
         "doc_id",
-        F.col("r.extracted").eqNullSafe(F.col("spans")).alias("span_equal"),
-        F.size("spans").alias("n_spans"),
-        F.col("r.f1_score").alias("f1_score"),
-        F.col("r.precision_score").alias("precision_score"),
-        F.col("r.recall_score").alias("recall_score"),
-        F.col("r.edit_distance_score").alias("edit_distance_score"),
-        F.col("r.bleu_score").alias("bleu_score"),
-        F.col("r.meteor_score").alias("meteor_score"),
-        F.col("r.teds_mean").alias("teds_mean"),
-        F.col("r.n_pairs").alias("teds_pairs"),
-        F.col("r.error_count").alias("teds_errors"),
-        F.col("r.map").alias("map"),
-        F.col("r.map_50").alias("map_50"),
-        F.col("r.map_75").alias("map_75"),
-        F.col("r.mar_100").alias("mar_100"),
+        "r.extracted <=> spans AS span_equal",
+        "size(spans) AS n_spans",
+        "r.f1_score AS f1_score",
+        "r.precision_score AS precision_score",
+        "r.recall_score AS recall_score",
+        "r.edit_distance_score AS edit_distance_score",
+        "r.bleu_score AS bleu_score",
+        "r.meteor_score AS meteor_score",
+        "r.teds_mean AS teds_mean",
+        "r.n_pairs AS teds_pairs",
+        "r.error_count AS teds_errors",
+        "r.map AS map",
+        "r.map_50 AS map_50",
+        "r.map_75 AS map_75",
+        "r.mar_100 AS mar_100",
     )
 
 

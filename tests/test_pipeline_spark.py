@@ -167,7 +167,9 @@ def test_salted_array_sum(spark):
 
 
 def test_checkpoint_resume(spark, docs, tmp_path):
-    """Kill after K buckets, rerun, assert no recomputation + identical finals."""
+    """Kill after K buckets, rerun: the resume recomputes only the
+    uncommitted buckets, leaves the committed ones untouched, ends with one
+    commit file per bucket and gives the uninterrupted run's rows."""
     from docling_metrics_spark.checkpoint import (
         read_checkpoint,
         read_metrics,
@@ -214,6 +216,83 @@ def test_checkpoint_resume(spark, docs, tmp_path):
     assert {r.batch_id for r in ckpt.collect()} == {
         f"corpus:{b}" for b in range(4)
     }
+    # one renamed commit file per bucket, no temp file left behind
+    assert sorted(_os.listdir(f"{out_resume}/checkpoint")) == [
+        f"commit-{b:05d}.parquet" for b in range(4)
+    ]
+
+
+def test_unreadable_lineage_fails_resume(spark, docs, tmp_path):
+    """A corrupt lineage file must stop the resume, not read as "nothing
+    committed" (which would recompute every bucket and duplicate lineage)."""
+    import os
+
+    import pyarrow as pa
+
+    from docling_metrics_spark.checkpoint import run_checkpointed
+
+    out = str(tmp_path / "out")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_checkpointed(spark, docs, out, n_buckets=4, fail_after_buckets=2)
+
+    def _files():
+        return {
+            os.path.join(dp, f): os.path.getmtime(os.path.join(dp, f))
+            for dp, _dn, fns in os.walk(out)
+            for f in fns
+        }
+
+    with open(os.path.join(out, "checkpoint", "garbage.parquet"), "wb") as fh:
+        fh.write(b"not a parquet file")
+    before = _files()
+    with pytest.raises(pa.ArrowInvalid):
+        run_checkpointed(spark, docs, out, n_buckets=4)
+    assert _files() == before, "the failed resume rewrote output"
+
+
+def test_checkpoint_commits_start_no_spark_job(spark, docs, tmp_path):
+    """Lineage commits and the resume's lineage read run on the driver: a
+    fresh run starts as many Spark jobs with 8 buckets as with 2."""
+    from docling_metrics_spark.checkpoint import run_checkpointed
+
+    sc = spark.sparkContext
+    jobs = {}
+    for n_buckets in (2, 8):
+        group = f"ckpt-jobs-{n_buckets}"
+        sc.setJobGroup(group, group)
+        try:
+            assert run_checkpointed(
+                spark, docs, str(tmp_path / group), n_buckets=n_buckets
+            ) == n_buckets
+        finally:
+            sc._jsc.clearJobGroup()
+        jobs[n_buckets] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs[2] == jobs[8] >= 1, jobs
+
+
+def test_flagship_plan_builds_in_few_round_trips(spark, docs):
+    """Building the flagship plan is serial driver time before the job
+    starts, and every Column-API call is one py4j round trip. The plan is
+    SQL text, so it takes a few dozen round trips (the Column-API form took
+    about 2,100)."""
+    import gc
+
+    aggregate_metrics(run_pipeline(docs))  # first build creates the UDF
+    gc.collect()  # release earlier JVM handles outside the counted window
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        aggregate_metrics(run_pipeline(docs))
+    finally:
+        client.send_command = send
+    assert len(calls) <= 150, len(calls)
 
 
 def test_teds_error_channel(spark):
